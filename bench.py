@@ -17,31 +17,30 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _prev_round_timings(repo_dir: str, sf: str) -> tuple[str | None, dict[str, float]]:
-    """Per-query timings from the newest BENCH_r*.json at the same sf —
-    the regression baseline. Driver snapshots store the raw bench line in
-    a 'tail' string (sometimes truncated), so fall back to regex-scraping
-    name:seconds pairs when no parsed dict is available."""
+    """Per-query timings from the newest committed full bench record
+    (``BENCH_local_r<N>.json``, highest N) at the same sf — the regression
+    baseline. Those records hold the complete ``queries`` dict bench.py
+    prints; the driver snapshots (``BENCH_r*.json``) keep only a truncated
+    stdout tail with a handful of timings, so they are not read."""
     import glob
     import re
 
-    out: dict[str, float] = {}
-    for path in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")), reverse=True):
+    def round_no(path: str) -> int:
+        m = re.search(r"BENCH_local_r(\d+)\.json$", path)
+        return int(m.group(1)) if m else -1
+
+    paths = glob.glob(os.path.join(repo_dir, "BENCH_local_r*.json"))
+    for path in sorted(paths, key=round_no, reverse=True):
         try:
             with open(path) as f:
                 d = json.load(f)
-        except (OSError, json.JSONDecodeError):
+            if float(d.get("sf", -1)) != float(sf):
+                continue
+        except (OSError, ValueError, TypeError):
             continue
-        if str(d.get("sf", sf)) not in (sf, str(float(sf))):
-            continue
-        parsed = d.get("parsed") if isinstance(d.get("parsed"), dict) else d
-        q = parsed.get("queries") if isinstance(parsed.get("queries"), dict) else None
-        if q:
-            out = {k: float(v) for k, v in q.items()}
-        else:
-            for m in re.finditer(r'"(q_\w+|e2e_pipeline)":\s*([0-9.]+)', d.get("tail") or ""):
-                out[m.group(1)] = float(m.group(2))
-        if out:
-            return os.path.basename(path), out
+        q = d.get("queries")
+        if isinstance(q, dict) and q:
+            return os.path.basename(path), {k: float(v) for k, v in q.items()}
     return None, {}
 
 
@@ -140,11 +139,11 @@ def build_headline(record: dict) -> dict:
     probes = record.get("probes", {})
     return {
         "metric": record["metric"],
-        # The committed canonical per-query record for this round (the full
-        # dict printed on the preceding line, saved verbatim).  The driver's
-        # bounded tail keeps only this headline; per-query round-over-round
-        # comparisons read the committed record instead (r11 verdict item 2).
-        "local_record": "BENCH_local_r12.json",
+        # The committed full per-query record this run was compared against
+        # (_prev_round_timings). The driver's bounded tail keeps only this
+        # headline; per-query round-over-round comparisons read the
+        # committed record instead (r11 verdict item 2).
+        "local_record": record.get("prev_bench"),
         "value": record["value"],
         "unit": record["unit"],
         "sf": record["sf"],

@@ -108,6 +108,35 @@ class TestComputeFlags:
         assert (reg, breach, soft) == ({}, {}, {})
 
 
+class TestRegressionBaseline:
+    """The regression tier compares against the newest committed full
+    record (BENCH_local_r<N>.json), not the truncated driver snapshot
+    (BENCH_r*.json), whose stdout tail yields only a few timings."""
+
+    def _write(self, d, name: str, doc: dict) -> None:
+        (d / name).write_text(json.dumps(doc))
+
+    def test_newest_full_local_record_at_same_sf(self, tmp_path):
+        full = {f"q_{i}": 1.0 + i for i in range(40)}
+        self._write(tmp_path, "BENCH_r13.json", {"sf": 0.1, "tail": '"q_0": 9.0, "q_1": 9.0'})
+        self._write(tmp_path, "BENCH_local_r9.json", {"sf": 0.1, "queries": {"q_0": 5.0}})
+        self._write(tmp_path, "BENCH_local_r12.json", {"sf": 0.1, "queries": full})
+        self._write(tmp_path, "BENCH_local_r14.json", {"sf": 1.0, "queries": {"q_0": 7.0}})
+        name, prev = bench._prev_round_timings(str(tmp_path), "0.1")
+        assert name == "BENCH_local_r12.json"  # r12 > r9 numerically; r14 is sf1
+        assert prev == full
+
+    def test_no_local_record_means_no_baseline(self, tmp_path):
+        self._write(tmp_path, "BENCH_r13.json", {"sf": 0.1, "tail": '"q_0": 9.0'})
+        assert bench._prev_round_timings(str(tmp_path), "0.1") == (None, {})
+
+    def test_repo_baseline_compares_every_gate(self):
+        name, prev = bench._prev_round_timings(REPO, "0.1")
+        with open(os.path.join(REPO, name)) as f:
+            assert prev == json.load(f)["queries"]
+        assert len(prev) > 280
+
+
 class TestHeadline:
     """r10 verdict item 3: the driver's bounded stdout-tail capture must
     always retain sec_per_query / n_queries / regression_count /
@@ -144,6 +173,11 @@ class TestHeadline:
             assert key in h
         assert h["sec_per_query"] == 0.904
         assert h["regressions"] == ["q_gate_000", "q_gate_001"]
+
+    def test_headline_names_the_baseline_record(self):
+        rec = self._record(0)
+        rec["prev_bench"] = "BENCH_local_r12.json"
+        assert bench.build_headline(rec)["local_record"] == "BENCH_local_r12.json"
 
     def test_headline_truncation_marker(self):
         h = bench.build_headline(self._record(20))

@@ -89,7 +89,6 @@ def test_openai_contract_slicing_model_and_order(spark, docs, tmp_path):
         model="text-embedding-ada-002",
         embedding_dim=3,
         embed_batch_size=7,
-        embed_threads=4,
     )
     out = embed(docs, cfg, client_factory=make_fake_openai_factory(spool)).collect()
     assert len(out) == 50

@@ -2,15 +2,21 @@
 that the oracle queries can't express (recall of ANN vs brute force,
 near-dup detection of planted duplicates, hamming locality of simhash)."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
 from vectorflow_spark.operators.dedup import (
+    MINHASH_COEFFS,
+    MINHASH_PRIME,
     drop_exact_duplicates,
     embedding_neardup_pairs,
     exact_duplicate_groups,
     jaccard_pairs,
+    lsh_band_buckets,
     minhash_candidate_pairs,
+    minhash_signatures,
     simhash_expr_pipeline,
 )
 from vectorflow_spark.operators.similarity import (
@@ -65,6 +71,44 @@ class TestMinhashLSH:
         out = {(r.a, r.b): r.jaccard for r in jaccard_pairs(dup_docs, kind="word", n=3, threshold=0.5).collect()}
         assert out[(1, 2)] == 1.0
         assert (1, 3) in out and 0.5 <= out[(1, 3)] < 1.0
+
+
+def _shingle_hash(shingle: str) -> int:
+    """Python restatement of dedup.shingle_hash_expr (28 bits)."""
+    return int(hashlib.md5(shingle.encode()).hexdigest()[:7], 16)
+
+
+def _char_shingles(text: str, n: int = 5) -> set[str]:
+    t = text.lower()
+    return {t[i : i + n] for i in range(len(t) - n + 1)}
+
+
+class TestMinhashCoefficients:
+    def test_every_hash_function_wraps(self):
+        for a, b in MINHASH_COEFFS:
+            assert a % 2 == 1 and a < MINHASH_PRIME
+            assert a * 2**28 >= MINHASH_PRIME  # wraps over 28-bit shingle hashes
+            assert (2**28 - 1) * a + b < 2**63  # no bigint overflow
+
+    def test_sharing_only_the_smallest_shingle_is_not_a_band0_pair(self, spark):
+        shared = min((f"{i:05d}" for i in range(100000)), key=_shingle_hash)
+        texts = {1: shared + "abcdefghijklm" * 2, 2: shared + "nopqrstuvwxyz" * 2}
+        sh = {d: _char_shingles(t) for d, t in texts.items()}
+        assert sh[1] & sh[2] == {shared}
+        assert all(min(s, key=_shingle_hash) == shared for s in sh.values())
+        # a multiplier that never wraps keeps the order of the raw hashes,
+        # so such a band would be the shared shingle in both documents
+        assert all(
+            min(s, key=lambda x: (_shingle_hash(x) * a + 1) % MINHASH_PRIME) == shared
+            for a in (1, 3, 5, 7)
+            for s in sh.values()
+        )
+        docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+        band0 = {
+            r.doc_id: r.bucket
+            for r in lsh_band_buckets(minhash_signatures(docs)).filter("band = 0").collect()
+        }
+        assert band0[1] != band0[2]
 
 
 class TestLshRecallAudit:

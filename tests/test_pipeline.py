@@ -89,10 +89,11 @@ class TestObservedPipeline:
     def test_metrics_ride_the_action(self, spark, sf_dir):
         """observe() metrics arrive with the single write action — no
         second job — and the counts are mutually consistent."""
-        from vectorflow_spark.pipeline import job_status_row, run_pipeline_observed
+        from vectorflow_spark.pipeline import job_status_row
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        records, obs = run_pipeline_observed(docs, _cfg())
+        obs: dict = {}
+        records = run_pipeline(docs, _cfg(), observations=obs)
         records.write.format("noop").mode("overwrite").save()
         status = job_status_row(obs, job_id="job-1")
         assert status["job_status"] == "COMPLETED"
@@ -101,14 +102,52 @@ class TestObservedPipeline:
         # every record carries embedding_dim floats
         assert obs["records_out"].get["n_floats"] == status["n_records"] * 16
 
+    @pytest.mark.parametrize("curate_quality", [False, True])
+    @pytest.mark.parametrize("curate_dedup", [False, True])
+    def test_observed_matches_plain_under_curation(self, spark, sf_dir, curate_quality, curate_dedup):
+        """Observing adds metrics, not behaviour: the observed plan gives
+        the plain plan's records under every curate flag, and the status
+        counts describe the curated documents that were actually chunked."""
+        from collections import Counter
+
+        from vectorflow_spark.operators.filters import filter_max_size
+        from vectorflow_spark.pipeline import curate_documents, job_status_row
+
+        base = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
+        # formatting-only copies (sf0.001 has no fingerprint duplicates),
+        # named after their original so the original is the keeper
+        copies = base.limit(6).select(
+            (F.col("doc_id") + 100000).alias("doc_id"),
+            F.concat(F.upper("text"), F.lit("  ")).alias("text"),
+            "lang",
+            F.concat("source", F.lit("~copy")).alias("source"),
+            "n_chars",
+        )
+        docs = base.unionByName(copies)
+        cfg = _cfg(curate_quality=curate_quality, curate_dedup=curate_dedup)
+
+        plain = Counter(r.id for r in run_pipeline(docs, cfg).collect())
+        obs: dict = {}
+        observed = Counter(r.id for r in run_pipeline(docs, cfg, observations=obs).collect())
+        status = job_status_row(obs, "job-c")
+
+        filtered = filter_max_size(filter_nonempty(docs), "text", cfg.max_file_size_bytes)
+        n_curated = curate_documents(filtered, cfg).count()
+        assert (n_curated < filtered.count()) == (curate_quality or curate_dedup)
+        assert observed == plain
+        assert status["n_records"] == sum(plain.values())
+        assert status["n_docs"] == n_curated
+        assert status["job_status"] == "COMPLETED"
+
     def test_runtime_empty_input_is_not_started(self, spark, sf_dir):
         """Zero surviving documents (runtime-empty, via a filter a file
         source can't fold away) still produces a status row — the
         NOT_STARTED terminal state."""
-        from vectorflow_spark.pipeline import job_status_row, run_pipeline_observed
+        from vectorflow_spark.pipeline import job_status_row
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 0)
-        records, obs = run_pipeline_observed(docs, _cfg())
+        obs: dict = {}
+        records = run_pipeline(docs, _cfg(), observations=obs)
         records.write.format("noop").mode("overwrite").save()
         assert job_status_row(obs, "job-2")["job_status"] == "NOT_STARTED"
 

@@ -127,7 +127,7 @@ class Vectorflow:
     # -- execution ----------------------------------------------------
 
     def _run_one(self, path: str, job_id: int):
-        from vectorflow_spark.pipeline import job_status_row, run_pipeline_observed
+        from vectorflow_spark.pipeline import job_status_row, run_pipeline
         from vectorflow_spark.sinks.writers import write_vectors
         from vectorflow_spark.sources.readers import extract_documents, read_raw_files
 
@@ -135,7 +135,8 @@ class Vectorflow:
         try:
             raw = read_raw_files(self.spark, path)
             docs = extract_documents(raw)
-            records, obs = run_pipeline_observed(docs, self.cfg, text_col="text", doc_col="source")
+            obs: dict = {}
+            records = run_pipeline(docs, self.cfg, text_col="text", doc_col="source", observations=obs)
             cfg = self.cfg
             if cfg.sink == "parquet" and "path" not in cfg.sink_options:
                 from dataclasses import replace

@@ -51,7 +51,6 @@ class BatchStatus(str, Enum):
 # Hard limits / tuning knobs carried over from the reference's implicit
 # performance envelope (BASELINE.md).
 MAX_OPENAI_EMBEDDING_BATCH_SIZE = 2048  # reference src/worker/config.py:2
-MAX_EMBEDDING_THREADS = 20  # reference src/worker/config.py:1
 VECTOR_UPSERT_BATCH_SIZE = 128  # reference src/worker/config.py:3
 MAX_EMBED_RETRIES = 5  # reference src/worker/worker.py:79-90
 MAX_FILE_SIZE_BYTES = 25 * 1024 * 1024  # reference src/api/app.py:54-59
@@ -73,7 +72,6 @@ class PipelineConfig:
     model: str = "text-embedding-ada-002"
     embedding_dim: int = 64  # driver testdata dim; ada=1536, bge=384
     embed_batch_size: int = MAX_OPENAI_EMBEDDING_BATCH_SIZE
-    embed_threads: int = MAX_EMBEDDING_THREADS
     embed_retries: int = MAX_EMBED_RETRIES
     sink: str = "parquet"  # parquet | qdrant | pinecone | weaviate | webhook
     sink_options: dict = field(default_factory=dict)

@@ -29,7 +29,3 @@ def sf_dir() -> str:
 def load_table(spark: SparkSession, name: str, base: str | None = None) -> DataFrame:
     return spark.read.parquet(f"{base or sf_dir()}/{name}.parquet")
 
-
-def register_views(spark: SparkSession, base: str | None = None) -> None:
-    for t in TABLES:
-        load_table(spark, t, base).createOrReplaceTempView(t)

@@ -8,10 +8,11 @@ positionally — order preservation is positional, never a sort.
 
 Spark mapping: ONE ``mapInPandas`` stage. Arrow delivers batches of exactly
 2048 rows (session factory pins ``arrow.maxRecordsPerBatch``), the UDF slices
-defensively anyway, runs the backend over a thread pool (I/O-bound HTTP —
-threads inside the UDF are still right on a cluster; each task holds its own
-pool), and emits the input columns plus a ``vector`` column. No shuffle: the
-embed stage runs in the same task as the chunker upstream.
+defensively anyway, calls the backend once per slice in a plain loop, and
+emits the input columns plus a ``vector`` column. Each task has one call in
+flight at a time; concurrency comes from Spark's task slots, not from a pool
+inside the task. No shuffle: the embed stage runs in the same task as the
+chunker upstream.
 
 Backends:
   openai         E1/E2 parity (import-gated; needs the openai package + key)
@@ -28,10 +29,8 @@ import struct
 import time
 from collections.abc import Callable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from vectorflow_spark.config import PipelineConfig
 
@@ -61,7 +60,7 @@ def md5hex_embedding(text: str, dim: int) -> list[float]:
     (0..15) of hex digit ``j % 32`` of ``md5(text + "|" + str(j // 32))``.
 
     Exists so gates that exercise the embed *plumbing* (mapInPandas batch
-    slicing, thread pools) can be verified content-exact against a DuckDB
+    slicing) can be verified content-exact against a DuckDB
     oracle: every component is an integer-valued float both engines compute
     from the same md5 hex string — no float-fold parity risk at all.
     blake2b-based ``deterministic_embedding`` stays the default (E3).
@@ -188,13 +187,10 @@ def embed(
     model = cfg.model
     dim = cfg.embedding_dim
     batch_size = cfg.embed_batch_size
-    n_threads = cfg.embed_threads
     retries = cfg.embed_retries
     cols = [f.name for f in out_fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         if backend == "deterministic":
             fn = lambda texts: _deterministic_batch(texts, dim)  # noqa: E731
         elif backend == "md5hex":
@@ -206,32 +202,11 @@ def embed(
         else:
             raise ValueError(f"unknown embeddings_type: {backend}")
 
-        use_threads = backend == "openai"
-        pool = ThreadPoolExecutor(max_workers=n_threads) if use_threads else None
-        try:
-            for pdf in batches:
-                texts = pdf[text_col].tolist()
-                slices = [texts[i : i + batch_size] for i in range(0, len(texts), batch_size)]
-                if pool is not None and len(slices) > 1:
-                    # map (not as_completed): results must stay positional
-                    results = list(pool.map(fn, slices))
-                else:
-                    results = [fn(s) for s in slices]
-                vectors: list[list[float]] = [v for r in results for v in r]
-                yield pdf[cols].assign(vector=pd.Series(vectors, index=pdf.index, dtype=object))
-        finally:
-            if pool is not None:
-                pool.shutdown()
+        for pdf in batches:
+            texts = pdf[text_col].tolist()
+            # slices run in order, so vectors stay positional
+            vectors = [v for i in range(0, len(texts), batch_size) for v in fn(texts[i : i + batch_size])]
+            yield pdf[cols].assign(vector=pd.Series(vectors, index=pdf.index, dtype=object))
 
     return df.mapInPandas(run, schema=schema)
 
-
-def embed_expr_deterministic(text_col: str, dim: int) -> "F.Column":
-    """E3 as a pandas UDF column (for single-column use without mapInPandas)."""
-    from pyspark.sql.types import ArrayType, FloatType
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: deterministic_embedding(t or "", dim))
-
-    return _udf(F.col(text_col))

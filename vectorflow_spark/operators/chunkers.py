@@ -37,7 +37,6 @@ Chunking itself needs no shuffle — it is a per-row flatMap.
 from __future__ import annotations
 
 import re
-import uuid
 from collections.abc import Callable
 
 import pandas as pd
@@ -53,7 +52,6 @@ from pyspark.sql.types import (
 
 from vectorflow_spark.config import ChunkStrategy, PipelineConfig
 from vectorflow_spark.functions import tokenizer
-from vectorflow_spark.functions.ids import VECTORFLOW_NAMESPACE
 
 SENTENCE_ENDINGS = r"(?<=[.!?…]) +"  # reference src/worker/worker.py:286
 PARAGRAPH_BOUND = 0.75  # reference src/worker/worker.py:218 (bound=0.75)
@@ -67,10 +65,6 @@ _CHUNK_STRUCT = ArrayType(
         ]
     )
 )
-
-
-def _uuid5(text: str, offset: int, tag: str) -> str:
-    return str(uuid.uuid5(VECTORFLOW_NAMESPACE, f"{text}-{offset}-{tag}"))
 
 
 # ---------------------------------------------------------------------------

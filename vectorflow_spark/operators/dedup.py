@@ -29,12 +29,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Fixed minhash parameters: k = bands * rows_per_band hash functions.
-# (a_i, b_i) pairs are small deterministic odd constants; modulus is a prime
-# below 2^31 so a_i*h + b_i stays under 2^62 (no bigint overflow in either
-# engine).
+# Fixed minhash parameters: k = bands * rows_per_band hash functions
+# h_i(x) = (a_i * x + b_i) mod p over 28-bit shingle hashes x. Every a_i is
+# a large odd constant below the prime with a_i * 2^28 >= p, so every
+# function wraps mod p and orders the shingles its own way; a multiplier
+# too small to wrap keeps h_i monotone in x, and all such functions pick
+# the same (smallest) shingle. a_i * x + b_i < 2^60: no bigint overflow in
+# either engine.
 MINHASH_PRIME = 2147483647
-MINHASH_COEFFS = [(2 * i + 1, 7919 * (i + 1) % MINHASH_PRIME) for i in range(16)]
+MINHASH_COEFFS = [
+    (a, 7919 * (i + 1))
+    for i, a in enumerate(
+        (
+            1216681719, 1601554129, 2085212535, 954254153,
+            954051181, 1638303231, 1884091959, 1123278215,
+            613125231, 1705094727, 867888699, 1300130343,
+            976971717, 1138335979, 936228567, 1385845587,
+        )
+    )
+]
 DEFAULT_BANDS = 4  # 4 bands x 4 rows -> catches jaccard >~ 0.6
 
 
@@ -117,7 +130,7 @@ def with_shingles(
 
 
 def shingle_hash_expr(shingle_col: str = "shingle") -> Column:
-    """Shingle -> 31-bit integer via the first 7 hex chars of md5 — the same
+    """Shingle -> 28-bit integer via the first 7 hex chars of md5 — the same
     construction is expressible in DuckDB ('0x'||substr(md5(s),1,7))::BIGINT,
     which is what makes the minhash chain oracle-checkable."""
     return F.expr(f"CAST(conv(substring(md5({shingle_col}), 1, 7), 16, 10) AS BIGINT)")

@@ -243,13 +243,6 @@ def _read_huffman(reader: _BitReader, table: _DecoderTable) -> int:
     return entry >> 5
 
 
-def _extend(v: int, s: int) -> int:
-    """Magnitude-category decode (T.81 F.2.2.1): low-order s bits -> value."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def _destuff(scan: bytes) -> list[bytes]:
     """Entropy bytes -> restart-interval segments with 0xFF00 stuffing
     removed. Segment boundaries are the RSTn markers (D0-D7)."""

@@ -37,11 +37,6 @@ def job_rollup(batch_status: DataFrame, job_col: str = "job_id", status_col: str
     )
 
 
-def status_lookup(jobs: DataFrame, job_ids: list, job_col: str = "job_id") -> DataFrame:
-    """A3: multi-job status lookup (an IN-list filter; partition-prunable)."""
-    return jobs.filter(F.col(job_col).isin(job_ids))
-
-
 def upload_report(manifest: DataFrame, class_col: str = "outcome") -> DataFrame:
     """A4: per-request ingest report — counts by outcome class (successful /
     failed / empty_file / duplicate_file, reference src/api/app.py:88-147)."""

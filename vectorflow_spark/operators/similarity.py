@@ -378,24 +378,6 @@ def pq_codebooks(
     ]
 
 
-def _sqdist(sub: Column, const: list[float]) -> Column:
-    """Squared L2 between a subvector expression and a literal — zip_with
-    square-diffs then a sequential left fold, the same order DuckDB's
-    list_sum folds, so the doubles are bit-identical for the oracle. Kept
-    as a HOF: the m*ksub distance table blows past the codegen size budget
-    if unrolled (see functions/vector.py) and an interpreted-fallback stage
-    is far slower than interpreted lambdas inside a codegen'd stage."""
-    return F.aggregate(
-        F.zip_with(
-            sub,
-            _const_vec(const),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
 def pq_encode(
     vectors: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],

@@ -323,14 +323,6 @@ def _quantizers(hdr):
 # ---------------------------------------------------------------------------
 
 
-def _mul1(a: int) -> int:
-    return ((a * 20091) >> 16) + a
-
-
-def _mul2(a: int) -> int:
-    return (a * 35468) >> 16
-
-
 def _idct4x4_add(coeffs, dst: np.ndarray, y0: int, x0: int) -> None:
     """in-place: dst[y0:y0+4, x0:x0+4] += idct(coeffs) (clipped).
 
@@ -1219,25 +1211,6 @@ def _fwht4x4(dcs: list) -> list:
         out[8 + c] = (c2 + 3) >> 3
         out[12 + c] = (d2 + 3) >> 3
     return out
-
-
-def _put_tree(be: _BoolEnc, tree: tuple, probs, leaf: int, start: int = 0) -> None:
-    # walk the tree collecting the bit path to ``leaf``
-    path = []
-
-    def walk(i: int, acc) -> bool:
-        for b in (0, 1):
-            t = tree[i + b]
-            if t <= 0:
-                if -t == leaf:
-                    path.extend(acc + [(probs[i >> 1], b)])
-                    return True
-            elif walk(t, acc + [(probs[i >> 1], b)]):
-                return True
-        return False
-
-    walk(start, [])
-    be.bits(path)
 
 
 def _value_bits(ap, p, a: int) -> None:

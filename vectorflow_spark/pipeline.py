@@ -10,7 +10,8 @@ order preservation is positional within rows, SURVEY.md §4.3.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 from vectorflow_spark.config import PipelineConfig
 from vectorflow_spark.embed.backends import embed
@@ -32,8 +33,6 @@ def curate_documents(
     expensive chunk+embed stages is strictly cheaper than after. Each is
     individually oracle-verified (q_gopher_quality, q_fingerprint_dedup);
     the composition is verified by q_curation_pipeline."""
-    from pyspark.sql import functions as F
-
     from vectorflow_spark.operators.textstats import fingerprint
 
     out = docs
@@ -78,7 +77,13 @@ def curate_documents(
     return out
 
 
-def run_pipeline(documents: DataFrame, cfg: PipelineConfig, text_col: str = "text", doc_col: str = "source") -> DataFrame:
+def run_pipeline(
+    documents: DataFrame,
+    cfg: PipelineConfig,
+    text_col: str = "text",
+    doc_col: str = "source",
+    observations: dict | None = None,
+) -> DataFrame:
     """documents(doc_id, text, source, ...) -> (id, source_data,
     source_document, embeddings) ready for any U1-U5 writer.
 
@@ -86,14 +91,50 @@ def run_pipeline(documents: DataFrame, cfg: PipelineConfig, text_col: str = "tex
     embed stages: scan partitions are sized for I/O bytes, but chunking and
     embedding are CPU-bound per document, so partition count must track
     cores, not input size — the Spark analog of the reference's 1000-line
-    batch fan-out (SURVEY.md §2.2 P1/P2)."""
+    batch fan-out (SURVEY.md §2.2 P1/P2).
+
+    Job accounting (SURVEY.md §2.8 A1/M6): pass a dict as ``observations``
+    and the builder puts two ``Observation``s in it — ``docs_in`` (n_docs,
+    n_chars) on the documents that survive the filters and curation, and
+    ``records_out`` (n_records, n_floats) on the sink records. The counts
+    ride the SAME action as the data — no second pass, no accumulator
+    races, exact once-per-row semantics even under task retries. Read
+    ``observations[name].get`` AFTER an action has materialized the frame;
+    ``job_status_row`` folds them into a status record. The reference
+    updates Postgres counters row-by-row per batch (job_service.py:32-51);
+    here the same facts cost zero extra jobs. Without a dict the plan has
+    no observe nodes."""
     docs = filter_max_size(filter_nonempty(documents, text_col), text_col, cfg.max_file_size_bytes)
     docs = curate_documents(docs, cfg, text_col, doc_col)
+    if observations is not None:
+        docs = _observe(
+            docs,
+            observations,
+            "docs_in",
+            F.count(F.lit(1)).alias("n_docs"),
+            # coalesce: sum() over an empty frame is NULL, which breaks the
+            # observed-row conversion — 0 is the correct empty-job value
+            F.coalesce(F.sum(F.length(text_col)), F.lit(0)).alias("n_chars"),
+        )
     sc = documents.sparkSession.sparkContext
     docs = docs.repartition(sc.defaultParallelism)
     chunks = chunk(docs, cfg, text_col=text_col)
     vectors = embed(chunks, cfg, text_col="text")
-    return to_vector_records(vectors, doc_col=doc_col)
+    records = to_vector_records(vectors, doc_col=doc_col)
+    if observations is not None:
+        records = _observe(
+            records,
+            observations,
+            "records_out",
+            F.count(F.lit(1)).alias("n_records"),
+            F.coalesce(F.sum(F.size("embeddings")), F.lit(0)).alias("n_floats"),
+        )
+    return records
+
+
+def _observe(df: DataFrame, observations: dict, name: str, *metrics) -> DataFrame:
+    observations[name] = Observation(name)
+    return df.observe(observations[name], *metrics)
 
 
 def run_pipeline_from_warc(
@@ -118,7 +159,6 @@ def run_pipeline_from_warc(
     'error') are excluded by the response filter and can be audited from
     ``read_warc`` directly."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from vectorflow_spark.operators.urls import canonical_url_expr
     from vectorflow_spark.sources.readers import strip_html_expr
@@ -139,58 +179,16 @@ def run_pipeline_from_warc(
     return run_pipeline(docs, cfg, text_col="text", doc_col="source")
 
 
-def run_pipeline_observed(
-    documents: DataFrame,
-    cfg: PipelineConfig,
-    text_col: str = "text",
-    doc_col: str = "source",
-):
-    """run_pipeline plus job accounting via ``observe()`` (SURVEY.md §2.8
-    A1/M6): per-stage row counts ride the SAME action as the data — no
-    second pass, no accumulator races, exact once-per-row semantics even
-    under task retries (unlike accumulators, observed metrics are tied to
-    the query execution). Returns ``(records, observations)``; read
-    ``observations[name].get`` AFTER an action has materialized the frame.
-
-    The reference updates Postgres counters row-by-row per batch
-    (job_service.py:32-51); here the same facts cost zero extra jobs.
-
-    When the plan runs zero tasks through an observe node (a statically
-    empty LocalRelation folds the node away; a fully partition-pruned scan
-    launches no tasks), the observation has no row to return —
-    ``job_status_row`` maps that to the zero-count NOT_STARTED record
-    instead of surfacing the raw error."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs_docs = Observation("docs_in")
-    obs_records = Observation("records_out")
-
-    docs = filter_max_size(filter_nonempty(documents, text_col), text_col, cfg.max_file_size_bytes)
-    docs = docs.observe(
-        obs_docs,
-        F.count(F.lit(1)).alias("n_docs"),
-        # coalesce: sum() over an empty frame is NULL, which breaks the
-        # observed-row conversion — 0 is the correct empty-job value anyway
-        F.coalesce(F.sum(F.length(text_col)), F.lit(0)).alias("n_chars"),
-    )
-    sc = documents.sparkSession.sparkContext
-    docs = docs.repartition(sc.defaultParallelism)
-    chunks = chunk(docs, cfg, text_col=text_col)
-    vectors = embed(chunks, cfg, text_col="text")
-    records = to_vector_records(vectors, doc_col=doc_col).observe(
-        obs_records,
-        F.count(F.lit(1)).alias("n_records"),
-        F.coalesce(F.sum(F.size("embeddings")), F.lit(0)).alias("n_floats"),
-    )
-    return records, {"docs_in": obs_docs, "records_out": obs_records}
-
-
 def job_status_row(observations: dict, job_id: str) -> dict:
     """Fold observed metrics into one reference-shaped status record
     (JobStatus semantics from config.py): COMPLETED when every surviving
     document produced records, FAILED when none did. Appended to a status
-    table by the caller — the Spark analog of update_job_with_batch."""
+    table by the caller — the Spark analog of update_job_with_batch.
+
+    When the plan runs zero tasks through an observe node (a statically
+    empty LocalRelation folds the node away; a fully partition-pruned scan
+    launches no tasks), the observation has no row to return; that maps to
+    the zero-count NOT_STARTED record instead of surfacing the raw error."""
     from vectorflow_spark.config import JobStatus
 
     def _get(name: str, defaults: dict) -> dict:

@@ -548,15 +548,6 @@ def q_concat_enhance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _chunk_query(strategy: ChunkStrategy):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cfg = PipelineConfig(chunk_strategy=strategy, chunk_size=64, chunk_overlap=32)
-        docs = _t(spark, sf_dir, "documents", split=True).select("doc_id", "text")
-        return chunkers.chunk(docs, cfg)
-
-    return fn
-
-
 # C1's oracle exists only under the regex tokenizer backend: its findall
 # semantics are reproducible in DuckDB (RE2's regexp_extract_all has the
 # same leftmost-first alternation), so the full window CONTENT hash-matches.
